@@ -67,10 +67,12 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
-@dataclass
+@dataclass(frozen=True)
 class LogStore:
     """Maps an arbitrary table onto dp3's (producer, topic, log_time,
-    sequence, payload...) model.
+    sequence, payload...) model.  Frozen: events_log_store hands every
+    caller the same memoized instance, so a variant is made with
+    dataclasses.replace, never by assigning a field.
 
     Reference: treemgr/treemgr.go:29-33 (one (producer, topic) pair = one
     storage tree). Here one (producer, topic) pair = one partition predicate
@@ -185,9 +187,9 @@ def events_log_store(spark: SparkSession, sf_dir: str, *, us_truncate: bool = Fa
     treatment (guide §5 driver metadata): the parquet footer/schema round
     trip plus dtype probe cost ~0.2-0.3 s inside the timed region of
     every stat_*/events_*/ql_* headline.  The memo caches the LogStore
-    DEFINITION only (a DataFrame handle + column names, never rows); no
-    caller mutates the returned store, and every action still scans the
-    parquet input.
+    DEFINITION only (a DataFrame handle + column names, never rows); the
+    store is frozen, so no caller can mutate the shared instance, and
+    every action still scans the parquet input.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

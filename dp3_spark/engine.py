@@ -95,9 +95,11 @@ class DP3Engine:
 
     def import_mcap(self, files: list[tuple[str, str]]) -> int:
         """POST /import analog: decode MCAP files (distributed, chunk
-        granularity) and append under the next version with idempotent
-        (producer, topic, log_time, sequence) dedup.  Returns the new
-        version."""
+        granularity) and append under the next version.  Rows are deduped
+        on (producer, topic, log_time, sequence) within this import only:
+        VersionedLogTable.append does not dedup against earlier versions,
+        so re-importing a file in a later import duplicates its rows.
+        Returns the new version."""
         if self.table is None:
             raise ValueError("import requires a writable VersionedLogTable")
         from dp3_spark.sources.mcap import read_mcap

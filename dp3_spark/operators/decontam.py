@@ -124,10 +124,9 @@ def minhash_contamination(
     """
     from dp3_spark.operators import dedup as DD
 
-    par = train.sparkSession.sparkContext.defaultParallelism
     if train_sigs is None:
         train_sigs = DD.minhash_signatures(
-            train.repartition(par), id_col, text_col, n=n, num_hashes=num_hashes
+            train, id_col, text_col, n=n, num_hashes=num_hashes
         ).localCheckpoint(eager=True)
     pairs = DD.minhash_lsh_pairs_incremental(
         eval_df,

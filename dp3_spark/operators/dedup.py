@@ -1,10 +1,20 @@
 """Deduplication operators for training-data pipelines.
 
 Beyond-reference surface (task brief): exact, MinHash+LSH, SimHash, n-gram
-Jaccard, embedding-cosine near-dup.  All are DataFrame compositions using
-the portable primitives in dp3_spark.functions — JVM-side, no Python UDFs,
-and (except SimHash bit-ops, which are still deterministic) each has an
-exactly-matching DuckDB oracle.
+Jaccard, embedding-cosine near-dup.  Exact, n-gram, SimHash and the
+paragraph/window passes are DataFrame compositions of the portable
+primitives in dp3_spark.functions, evaluated JVM-side.  MinHash work
+crosses into Python where Catalyst can't vectorize it: the signature pass
+and both verify transports run as Arrow-batched numpy in mapInPandas.
+Except SimHash bit-ops (still deterministic), each has an exactly-matching
+DuckDB oracle.
+
+The MinHash family (minhash_lsh_pairs, minhash_lsh_pairs_incremental,
+streaming/dedup_stream.py, decontam.minhash_contamination and the registry
+seed builders) shares ONE pipeline defined here: minhash_signatures (text
+-> signatures), _band_keys / _banded_frame (signatures -> band keys),
+_band_pairs (band keys -> candidate pairs) and _verify (candidates ->
+exact-jaccard pairs, transport chosen from row counts).
 
 Scale notes (100 TB):
 - exact dedup is a hash-partition groupBy on the fingerprint — one shuffle,
@@ -19,6 +29,8 @@ Scale notes (100 TB):
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,6 +61,11 @@ VERIFY_BROADCAST_MAX_ROWS = 200_000
 # fan-out where the endpoint set is no longer a small fraction of the
 # index), fall back to the full-table shuffle verify.
 ENDPOINT_SLICE_MAX_BROADCAST_IDS = 2_000_000
+# candidates='capped': only the first BUCKET_CAP members of a band bucket
+# (by id) fan out as join LHS.  At 64 the fixture corpus derives components
+# identical to all-pairs (pinned in tests); the registry oracles
+# (queries._minhash_oracle) mirror this constant.
+BUCKET_CAP = 64
 
 
 def _spread_text(df: DataFrame) -> DataFrame:
@@ -184,6 +201,8 @@ def minhash_signatures(
     for every document come from a single (num_hashes × total_shingles)
     modmul + np.minimum.reduceat over document boundaries.  ~5× over the
     per-document formulation, and the constant that multiplies at 100 TB.
+    The input is spread first when it arrives in too few partitions
+    (_spread_text), so callers pass their frame as-is.
     Output: (id, shingles array<bigint> sorted distinct, card,
     mh array<bigint>[num_hashes])."""
     import numpy as np
@@ -286,8 +305,10 @@ def minhash_signatures(
                 {"id": pdf[id_col].values, "shingles": shs, "card": cards, "mh": mhs}
             )
 
-    return df.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(
-        gen, "id long, shingles array<bigint>, card int, mh array<bigint>"
+    return (
+        _spread_text(df)
+        .select(F.col(id_col).alias(id_col), F.col(text_col))
+        .mapInPandas(gen, "id long, shingles array<bigint>, card int, mh array<bigint>")
     )
 
 
@@ -337,6 +358,53 @@ def _banded_frame(
             F.col("bk.band_key").alias("band_key"),
             *val_cols,
         )
+    )
+
+
+def _band_keys(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(id, band, band_key) of a signature table — the banding a probe
+    joins on, and the `bands` table persisted next to a signature index."""
+    return _banded_frame(sigs, bands, rows).select("id", "band", "band_key")
+
+
+def write_signature_index(
+    docs: DataFrame,
+    root: str,
+    id_col: str,
+    text_col: str,
+    *,
+    n: int = 3,
+    num_hashes: int = 128,
+    bands: int = 16,
+) -> None:
+    """Persist a signature index of `docs`: minhash_signatures output at
+    `<root>/sigs` and its banding at `<root>/bands` — the two tables
+    minhash_lsh_pairs_incremental takes as index_sigs / index_bands and
+    StreamingCorpusDedup keeps under its root.  The banding is derived
+    from the written signatures, so the two tables always agree."""
+    sigs_path = os.path.join(root, "sigs")
+    minhash_signatures(
+        docs, id_col, text_col, n=n, num_hashes=num_hashes
+    ).write.mode("overwrite").parquet(sigs_path)
+    sigs = docs.sparkSession.read.parquet(sigs_path)
+    _band_keys(sigs, bands, num_hashes // bands).write.mode("overwrite").parquet(
+        os.path.join(root, "bands")
+    )
+
+
+def _band_pairs(x: DataFrame, y: DataFrame, also=None) -> DataFrame:
+    """Candidate pairs (id_a < id_b): every x row joined with every y row
+    of the same (band, band_key) bucket.  A pair colliding in several
+    bands appears once per band — `_verify` decides where that dedup
+    goes.  `also` is an extra condition over the aliased x / y rows."""
+    cond = F.col("x.id") < F.col("y.id")
+    if also is not None:
+        cond = cond & also
+    return (
+        x.alias("x")
+        .join(y.alias("y"), ["band", "band_key"])
+        .filter(cond)
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
     )
 
 
@@ -409,6 +477,104 @@ def _np_shared_counts(sh_a, sh_b):
     return np.bincount(a_pair[hit], minlength=npairs).astype(np.int64)
 
 
+def _verify(cand: DataFrame, sigs: DataFrame, threshold: float, n_rows: int) -> DataFrame:
+    """Exact-jaccard verify of candidate pairs (id_a, id_b) against the
+    signature table `sigs`, which holds `n_rows` rows: (id_a, id_b,
+    jaccard) for the distinct pairs with jaccard >= threshold.
+
+    The transport follows from n_rows alone.  Within
+    VERIFY_BROADCAST_MAX_ROWS, _verify_broadcast ships the (id -> shingle
+    set) table to workers ONCE and streams bare (id_a, id_b) pairs through
+    the numpy intersect — on a near-dup-heavy corpus a per-pair array join
+    duplicates every shingle array per candidate (~5 GB through Arrow for
+    1M pairs of 300-shingle docs).  Beyond it, _verify_shuffle delivers
+    the arrays by two hash joins, for signature tables past broadcast
+    range (same numpy kernel, different array transport).
+
+    A pair colliding in several bands arrives once per band.  The shuffle
+    transport dedups BEFORE verify: dup pairs would fetch both shingle
+    arrays again.  On the broadcast transport the pair stream is two bare
+    longs and the kernel is vectorized — re-verifying a ~1.3x dup factor
+    is far cheaper than a full-candidate-list distinct shuffle (measured
+    2x cold / 15% warm on the sf0.1 corpus), so the few verified pairs
+    are deduped AFTER instead.  AQE coalesces the candidate shuffle to few
+    partitions (rows are tiny) but verify does per-pair numpy work, so
+    candidates are re-spread first or the intersect runs on 2-3 cores."""
+    par = cand.sparkSession.sparkContext.defaultParallelism
+    if n_rows > VERIFY_BROADCAST_MAX_ROWS:
+        return _verify_shuffle(cand.distinct().repartition(2 * par), sigs, threshold)
+    return _verify_broadcast(cand.repartition(2 * par), sigs, threshold).dropDuplicates(
+        ["id_a", "id_b"]
+    )
+
+
+def _slice_endpoints(cand: DataFrame, sigs: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """Restrict the signature table to candidate ENDPOINTS before verify,
+    so the verify transport moves O(candidates) rows however large the
+    index: candidates are materialized once (they feed the id set and the
+    verify), and their distinct id set semi-joins `sigs` as a broadcast —
+    map-only on the index side.  Returns (cand, sigs, n_endpoints); the
+    caller picks the transport on n_endpoints.  Above
+    ENDPOINT_SLICE_MAX_BROADCAST_IDS the id set is no longer a small
+    fraction of the index and `sigs` is returned whole.
+
+    Every candidate id exists in `sigs`: index candidates come from its
+    own banding, and a bands-ahead-of-sigs id after a crash is by
+    construction a member of the replayed batch."""
+    cand = cand.localCheckpoint(eager=True)
+    ids = (
+        cand.select(F.col("id_a").alias("id"))
+        .unionByName(cand.select(F.col("id_b").alias("id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    m = ids.count()
+    if m <= ENDPOINT_SLICE_MAX_BROADCAST_IDS:
+        sigs = sigs.join(F.broadcast(ids), "id", "left_semi")
+    return cand, sigs, m
+
+
+def _pairs_from_signatures(
+    sigs: DataFrame,
+    n_rows: int,
+    bands: int,
+    rows: int,
+    threshold: float,
+    *,
+    capped: bool = False,
+) -> DataFrame:
+    """Band -> candidates -> verify over a materialized signature table of
+    `n_rows` rows: the pair pipeline of minhash_lsh_pairs, also run by
+    StreamingCorpusDedup's first drain on its checkpointed batch
+    signatures.  Null-text docs have null signatures and drop out inside
+    _banded_frame."""
+    if capped:
+        # rank members within each bucket; only the first BUCKET_CAP fan
+        # out as join LHS — candidate volume is bucket-linear.  The rank
+        # window partitions by the EXACT band tuple (band_vals), not the
+        # xxhash64 key: see _banded_frame — a key collision must not be
+        # able to change which members the cap keeps.
+        # ONE exact-vals explode, materialized, feeds BOTH join sides:
+        # a second explode pass (plain banded for the RHS) measured as
+        # expensive as the rank window itself
+        bex = _banded_frame(sigs, bands, rows, exact_vals=True).localCheckpoint(
+            eager=True
+        )
+        banded = bex.drop("band_vals")
+        # band_key leads the partition spec so the window sort resolves
+        # almost every comparison on the 8-byte hash; band_vals only
+        # disambiguates actual collisions (the exactness requirement)
+        wo = Window.partitionBy("band", "band_key", "band_vals").orderBy("id")
+        lhs = (
+            bex.withColumn("rn", F.row_number().over(wo))
+            .filter(F.col("rn") <= BUCKET_CAP)
+            .drop("rn", "band_vals")
+        )
+    else:
+        lhs = banded = _band_keys(sigs, bands, rows)
+    return _verify(_band_pairs(lhs, banded), sigs, threshold, n_rows)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -418,9 +584,7 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 16,
     threshold: float = 0.6,
-    verify: str = "auto",
     candidates: str = "all",
-    bucket_cap: int = 64,
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with exact Jaccard.
 
@@ -445,104 +609,44 @@ def minhash_lsh_pairs(
 
     candidates='all' emits every in-bucket pair — the complete pair list,
     the mode the oracle checks pair-for-pair.  candidates='capped' emits
-    (x, y) only when x is among the first `bucket_cap` members of the
-    bucket (by id): identical to all-pairs for buckets <= bucket_cap, and
+    (x, y) only when x is among the first BUCKET_CAP members of the
+    bucket (by id): identical to all-pairs for buckets <= BUCKET_CAP, and
     cap*k instead of k^2/2 candidates beyond.  On clustery corpora
     (template families, boilerplate) bucket sizes grow WITH corpus size,
     so all-pairs candidate volume grows quadratically — the fixture's
     5000 docs already produce 1.03M candidates, and at 100x the corpus
     that is the scale-killer; capped makes candidate volume linear
-    (bands * bucket_cap per doc, worst case).  The right input for
+    (bands * BUCKET_CAP per doc, worst case).  The right input for
     CONNECTIVITY consumers (connected-components clustering needs a
     spanning subgraph, not every edge): a pair is lost only if BOTH
-    members sit beyond rank `bucket_cap` in EVERY bucket they share and
-    neither verifies against any of the first `bucket_cap` — measured on
+    members sit beyond rank BUCKET_CAP in EVERY bucket they share and
+    neither verifies against any of the first BUCKET_CAP — measured on
     the fixture corpus the derived components are identical to all-pairs
     (pinned in tests).  Not for consumers that need the complete list.
 
-    verify='broadcast' ships the (id -> shingle set) table to workers ONCE
-    (sc.broadcast) and streams bare (id_a, id_b) pairs through the numpy
-    intersect — on a near-dup-heavy corpus the alternative per-pair array
-    join duplicates every shingle array per candidate (~5 GB through Arrow
-    for 1M pairs of 300-shingle docs).  verify='shuffle' does that join —
-    arrays flow through a shuffle once per pair side — for corpora whose
-    signature table exceeds broadcast range (the at-scale path; same numpy
-    kernel, different array transport).  'auto' picks by corpus size."""
+    The verify transport (broadcast shingle table or two hash joins) is
+    chosen by _verify from the signature row count; see there.
+
+    The signatures are kept with .cache() + count() ON PURPOSE, not
+    localCheckpoint: the pass is CPU-heavy but byte-small, so AQE would
+    coalesce any recomputation of it down to one task, and the eager
+    count fixes when it runs.  Spark's cache manager matches the same
+    plan on the next call, so repeated passes over one DataFrame skip the
+    mapInPandas signature pass entirely (pinned by
+    tests/test_operators.py::test_minhash_lsh_pairs_reuses_cached_signatures;
+    measured ~25% of a corpus_dedup benchmark pass on 4 cores).  At cluster
+    scale this becomes a persisted signatures table, which is how
+    repeated dedup runs anyway."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must divide into equal bands")
-    if verify not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown verify mode {verify!r}")
     if candidates not in ("all", "capped"):
         raise ValueError(f"unknown candidates mode {candidates!r}")
-    rows = num_hashes // bands
-    par = df.sparkSession.sparkContext.defaultParallelism
-    # a small parquet reads as few partitions; the signature work is
-    # CPU-bound per row, so spread under-parallel inputs first (see
-    # _spread_text — many-split inputs are left alone)
-    # cache + eager materialization: the signature pass is CPU-heavy but
-    # byte-small, so AQE would coalesce any recomputation of it down to one
-    # task, and lazy cache timing makes runtimes vary run-to-run.  At true
-    # cluster scale this becomes a persisted signatures table, which is how
-    # repeated dedup runs anyway.
-    sigs = minhash_signatures(
-        _spread_text(df), id_col, text_col, n=n, num_hashes=num_hashes
-    ).cache()
+    sigs = minhash_signatures(df, id_col, text_col, n=n, num_hashes=num_hashes).cache()
     n_docs = sigs.count()
-    if verify == "auto":
-        # ~300 shingles/doc × 8 B ≈ 2.4 KB/doc: 200k docs ≈ 500 MB broadcast
-        verify = "broadcast" if n_docs <= VERIFY_BROADCAST_MAX_ROWS else "shuffle"
-    # one banded row per (doc, band) via a single explode — not a
-    # bands-way union, which would re-read the cache `bands` times;
-    # null-text docs have null signatures — dropped inside _banded_frame
-    if candidates == "capped":
-        # rank members within each bucket; only the first bucket_cap fan
-        # out as join LHS — candidate volume is bucket-linear.  The rank
-        # window partitions by the EXACT band tuple (band_vals), not the
-        # xxhash64 key: see _banded_frame — a key collision must not be
-        # able to change which members the cap keeps.
-        from pyspark.sql import Window
-
-        # ONE exact-vals explode, materialized, feeds BOTH join sides:
-        # a second explode pass (plain banded for the RHS) measured as
-        # expensive as the rank window itself
-        bex = _banded_frame(sigs, bands, rows, exact_vals=True).localCheckpoint(
-            eager=True
-        )
-        banded = bex.drop("band_vals")
-        # band_key leads the partition spec so the window sort resolves
-        # almost every comparison on the 8-byte hash; band_vals only
-        # disambiguates actual collisions (the exactness requirement)
-        wo = Window.partitionBy("band", "band_key", "band_vals").orderBy("id")
-        lhs = (
-            bex.withColumn("rn", F.row_number().over(wo))
-            .filter(F.col("rn") <= bucket_cap)
-            .drop("rn", "band_vals")
-        )
-    else:
-        banded = _banded_frame(sigs, bands, rows)
-        lhs = banded
-    cand = (
-        lhs.alias("x")
-        .join(banded.alias("y"), ["band", "band_key"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+    return _pairs_from_signatures(
+        sigs, n_docs, bands, num_hashes // bands, threshold,
+        capped=candidates == "capped",
     )
-    # a pair colliding in several bands appears once per band.  On the
-    # shuffle transport dedup BEFORE verify: dup pairs would fetch both
-    # shingle arrays again.  On the broadcast transport the pair stream is
-    # two bare longs and the verify kernel is vectorized — re-verifying a
-    # ~1.3x dup factor is far cheaper than a full-candidate-list distinct
-    # shuffle (measured 2x cold / 15% warm on the sf0.1 corpus), so dedup
-    # the few verified pairs AFTER instead.
-    if verify == "shuffle":
-        cand = cand.distinct()
-    # AQE coalesces the candidate shuffle to few partitions (rows are
-    # tiny) but the verify stage does per-pair numpy work — re-spread it
-    # or the intersect runs on 2-3 cores
-    cand = cand.repartition(2 * par)
-    if verify == "shuffle":
-        return _verify_shuffle(cand, sigs, threshold)
-    return _verify_broadcast(cand, sigs, threshold).dropDuplicates(["id_a", "id_b"])
 
 
 def _verify_broadcast(cand: DataFrame, sigs: DataFrame, thr: float) -> DataFrame:
@@ -609,11 +713,9 @@ def _probe_candidates(
     b_idx = (
         index_bands.select("id", "band", "band_key")
         if index_bands is not None
-        else _banded_frame(
-            index_sigs.select("id", "shingles", "card", "mh"), bands, rows
-        ).select("id", "band", "band_key")
+        else _band_keys(index_sigs, bands, rows)
     )
-    b_new = _banded_frame(sigs_new, bands, rows).select("id", "band", "band_key")
+    b_new = _band_keys(sigs_new, bands, rows)
     vs_index = (
         b_idx.join(
             F.broadcast(b_new.withColumnRenamed("id", "nid")),
@@ -627,13 +729,7 @@ def _probe_candidates(
             F.greatest("id", "nid").alias("id_b"),
         )
     )
-    in_batch = (
-        b_new.alias("x")
-        .join(F.broadcast(b_new.alias("y")), ["band", "band_key"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
-    return vs_index.unionByName(in_batch)
+    return vs_index.unionByName(_band_pairs(b_new, F.broadcast(b_new)))
 
 
 def minhash_lsh_pairs_incremental(
@@ -646,20 +742,19 @@ def minhash_lsh_pairs_incremental(
     num_hashes: int = 128,
     bands: int = 16,
     threshold: float = 0.6,
-    verify: str = "auto",
     precomputed_sigs: DataFrame | None = None,
     index_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against a persisted signature index — the
     real-world shape of corpus refreshes: the 100 TB corpus was
-    signature-indexed once (minhash_signatures persisted as a table); each
-    incoming batch signatures only ITS documents and probes the index,
-    instead of re-running dedup over corpus + batch from scratch.
+    signature-indexed once (write_signature_index); each incoming batch
+    signatures only ITS documents and probes the index, instead of
+    re-running dedup over corpus + batch from scratch.
 
     index_sigs: a previous minhash_signatures output (id, shingles, card,
     mh), typically `spark.read.parquet(sig_table)`.  Must share n /
     num_hashes with this call, and ids must be disjoint from the batch.
-    index_bands: optional persisted `_banded_frame` output (id, band,
+    index_bands: optional persisted `_band_keys` output (id, band,
     band_key) for the SAME index — lets the probe path skip the per-batch
     banding fold entirely (ignored on the large-batch fallback path,
     which re-bands index∪batch symmetrically).  Must be derived from
@@ -676,20 +771,18 @@ def minhash_lsh_pairs_incremental(
     Scale shape: banding the index is a map-only pass over the signature
     table (no text re-shingling); the candidate join hash-partitions on
     (band, band_key) where only buckets containing a batch doc produce
-    candidates.  Verify transport ('auto'): while index+batch fit the
-    broadcast budget, plain broadcast verify; past it, a probe-sized
-    batch slices the signature table to candidate ENDPOINTS (broadcast
-    semi-join on the candidate-id set) and picks broadcast-vs-shuffle on
-    the endpoint count — verify cost is O(candidates) however large the
-    index (measured flat-ish at 100x index rows, probe_dedup_100x.py).
-    Forcing verify='shuffle' keeps the full-table two-hash-join
-    transport, the right shape for backfill-scale candidate sets."""
+    candidates.  Verify (_verify) picks its transport from row counts:
+    while index+batch fit the broadcast budget, plain broadcast verify;
+    against a big index (past ENDPOINT_SLICE_MIN_INDEX_ROWS, or
+    index+batch past the budget) a probe-sized batch first slices the
+    signature table to candidate ENDPOINTS and picks the transport on the
+    endpoint count — verify cost is O(candidates) however large the index
+    (measured flat-ish at 100x index rows, tools/probe_dedup_100x.py).  A
+    batch past PROBE_BROADCAST_MAX_ROWS is a backfill: it bands
+    index∪batch symmetrically and verifies against the whole table."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must divide into equal bands")
-    if verify not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown verify mode {verify!r}")
     rows = num_hashes // bands
-    par = new_df.sparkSession.sparkContext.defaultParallelism
     # callers that already signatured the batch (e.g. the streaming
     # corpus-refresh pipeline, which persists signatures anyway) pass
     # precomputed_sigs to skip the second shingling pass
@@ -697,7 +790,7 @@ def minhash_lsh_pairs_incremental(
         precomputed_sigs.select("id", "shingles", "card", "mh")
         if precomputed_sigs is not None
         else minhash_signatures(
-            _spread_text(new_df), id_col, text_col, n=n, num_hashes=num_hashes
+            new_df, id_col, text_col, n=n, num_hashes=num_hashes
         ).localCheckpoint(eager=True)
     )
 
@@ -705,94 +798,27 @@ def minhash_lsh_pairs_incremental(
         "is_new", F.lit(False)
     ).unionByName(sigs_new.withColumn("is_new", F.lit(True)))
     n_new = sigs_new.count()
-    n_idx = None
-    probe = n_new <= PROBE_BROADCAST_MAX_ROWS
-    if verify == "auto":
-        # same budget as minhash_lsh_pairs (~2.4 KB of shingles per doc);
-        # counted per side — a parquet-backed index answers count() from
-        # footer stats without materializing anything
-        n_idx = index_sigs.count()
-        if n_idx + n_new <= VERIFY_BROADCAST_MAX_ROWS:
-            verify = "broadcast"
-        elif not probe:
-            verify = "shuffle"
-        # else: stays "auto" — a probe batch against a big index picks
-        # the transport below on CANDIDATE volume, independent of index
-        # size (the corpus-refresh contract: index growth must not
-        # degrade the probe's verify plan)
-    if probe:
-        cand = _probe_candidates(sigs_new, index_sigs, index_bands, bands, rows)
-    else:
+    # counted per side — a parquet-backed index answers count() from
+    # footer stats without materializing anything
+    n_idx = index_sigs.count()
+    n_rows = n_idx + n_new
+    if n_new > PROBE_BROADCAST_MAX_ROWS:
         # huge batch: fall back to the symmetric self-join (both sides
         # shuffle on (band, band_key) — the minhash_lsh_pairs plan)
         banded = _banded_frame(all_sigs, bands, rows)
-        cand = (
-            banded.alias("x")
-            .join(banded.alias("y"), ["band", "band_key"])
-            .filter(
-                (F.col("x.id") < F.col("y.id"))
-                & (F.col("x.is_new") | F.col("y.is_new"))
-            )
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        )
-    # same dedup placement rule as minhash_lsh_pairs: pre-distinct only
-    # when dup pairs would re-fetch shingle arrays through the shuffle
-    # transport; on broadcast, dedup the verified output instead
-    if verify == "shuffle":
-        # forced full-table transport (backfill-scale candidate sets):
-        # the two hash joins move the whole signature table — the right
-        # shape when candidates are a large fraction of the corpus
-        return _verify_shuffle(cand.distinct().repartition(2 * par), all_sigs, threshold)
-    if verify == "auto":
-        # probe batch vs big index: materialize candidates ONCE (they
-        # feed the endpoint slice and the verify), slice the signature
-        # table to candidate endpoints (broadcast semi-join — map-only on
-        # the index side), then pick the transport on the ENDPOINT count:
-        # within the broadcast budget the driver collect is O(candidates);
-        # beyond it, the shuffle verify still only moves sliced rows.
-        # Measured at 100x index rows (tools/probe_dedup_100x.py): this
-        # path holds ~7 s where index-size-gated auto chose a 14 s full
-        # shuffle — the residue is the two map-only index column scans.
-        cand = cand.distinct().localCheckpoint(eager=True)
-        cand_ids = (
-            cand.select(F.col("id_a").alias("id"))
-            .unionByName(cand.select(F.col("id_b").alias("id")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        m = cand_ids.count()
-        if m <= ENDPOINT_SLICE_MAX_BROADCAST_IDS:
-            all_sigs = all_sigs.join(F.broadcast(cand_ids), "id", "left_semi")
-        if m > VERIFY_BROADCAST_MAX_ROWS:
-            return _verify_shuffle(cand.repartition(2 * par), all_sigs, threshold)
-        return _verify_broadcast(cand.repartition(2 * par), all_sigs, threshold).dropDuplicates(
-            ["id_a", "id_b"]
-        )
-    if probe and n_idx is None:
-        # only pay the (footer-answered) count when the slice is even
-        # possible — a huge batch skips it regardless of index size
-        n_idx = index_sigs.count()
-    if probe and n_idx > ENDPOINT_SLICE_MIN_INDEX_ROWS:
-        # probe refinement: the broadcast transport collects (id, shingles)
-        # driver-side — restrict it to candidate ENDPOINTS, so the collect
-        # is O(candidates), not O(index) (every candidate id exists in
-        # all_sigs: index candidates come from its own banding — a
-        # bands-ahead-of-sigs id after a crash is by construction a member
-        # of the replayed batch, hence present in sigs_new).  Candidates
-        # are materialized once and feed both the id slice and the verify.
-        # Gated on index size: below the threshold the full collect is
-        # already bounded and the slice's eager checkpoint job costs more
-        # than it saves (measured neutral-to-negative at 4k-doc fixtures).
-        cand = cand.localCheckpoint(eager=True)
-        cand_ids = (
-            cand.select(F.col("id_a").alias("id"))
-            .unionByName(cand.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        all_sigs = all_sigs.join(F.broadcast(cand_ids), "id", "left_semi")
-    return _verify_broadcast(cand.repartition(2 * par), all_sigs, threshold).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+        cand = _band_pairs(banded, banded, F.col("x.is_new") | F.col("y.is_new"))
+    else:
+        cand = _probe_candidates(sigs_new, index_sigs, index_bands, bands, rows)
+        # below ENDPOINT_SLICE_MIN_INDEX_ROWS (and within the broadcast
+        # budget) the full collect is already bounded and the slice's
+        # eager checkpoint jobs cost more than they save (measured
+        # neutral-to-negative at 4k-doc fixtures).  Measured at 100x index
+        # rows (tools/probe_dedup_100x.py): the slice holds ~7 s where an
+        # index-size-gated transport chose a 14 s full shuffle — the
+        # residue is the two map-only index column scans.
+        if n_idx > ENDPOINT_SLICE_MIN_INDEX_ROWS or n_rows > VERIFY_BROADCAST_MAX_ROWS:
+            cand, all_sigs, n_rows = _slice_endpoints(cand, all_sigs)
+    return _verify(cand, all_sigs, threshold, n_rows)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 32, n: int = 3) -> DataFrame:

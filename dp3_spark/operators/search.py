@@ -53,7 +53,7 @@ def tokens_duck(col: str) -> str:
 
 
 # single-pass dispatch for bm25_topk (same auto-dispatch idiom as
-# dedup.minhash_lsh_pairs' verify="auto"): below this input size the
+# dedup._verify's size-chosen transport): below this input size the
 # lazy 3-subtree plan wins — its three corpus tokenizations (postings,
 # df-reuse, scalars) schedule CONCURRENTLY inside one action and the
 # corpus is too small for pass count to matter, while the single-pass

@@ -534,7 +534,7 @@ def embedding_dup_pairs_lsh(
     )
     if verify == "auto":
         verify = "broadcast" if n_corpus <= BROADCAST_VERIFY_MAX_ROWS else "shuffle"
-    # dedup placement mirrors dedup.minhash_lsh_pairs: multi-band dup pairs
+    # dedup placement mirrors dedup._verify: multi-band dup pairs
     # must not re-fetch vectors through the shuffle transport, but on the
     # broadcast transport re-scoring the dup factor beats a full
     # candidate-list distinct shuffle — dedup the verified pairs after

@@ -3073,7 +3073,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 
 def _minhash_oracle(
-    num_hashes: int, bands: int, threshold: float, *, bucket_cap: int | None = None
+    num_hashes: int, bands: int, threshold: float, *, capped: bool = False
 ) -> str:
     # relational formulation (unnest + cross-join coefficients + group-min):
     # DuckDB executes this vectorized, unlike `num_hashes` inline list-lambda
@@ -3084,14 +3084,14 @@ def _minhash_oracle(
     coeffs = DD.minhash_coeffs(num_hashes)
     p = DD.MINHASH_P
     coe_values = ", ".join(f"({j}, {a}, {b})" for j, (a, b) in enumerate(coeffs))
-    if bucket_cap is not None:
-        # capped candidates: LHS restricted to the first bucket_cap bucket
+    if capped:
+        # capped candidates: LHS restricted to the first BUCKET_CAP bucket
         # members by id (mirrors dedup.minhash_lsh_pairs candidates='capped')
         cand_cte = f"""
       select distinct x.doc_id as id_a, y.doc_id as id_b
       from (select * from (select banded.*, row_number() over
               (partition by band, band_key order by doc_id) as rn from banded)
-            where rn <= {bucket_cap}) x
+            where rn <= {DD.BUCKET_CAP}) x
       join banded y using (band, band_key)
       where x.doc_id < y.doc_id
     """
@@ -3140,10 +3140,10 @@ def dedup_minhash_lsh(spark, sf_dir):
     )
 
 
-@register("dedup_minhash_capped", _minhash_oracle(128, 16, 0.7, bucket_cap=64))
+@register("dedup_minhash_capped", _minhash_oracle(128, 16, 0.7, capped=True))
 def dedup_minhash_capped(spark, sf_dir):
     """candidates='capped' variant of dedup_minhash_lsh — the 100x-scale
-    path: candidate volume is bucket-LINEAR (bands x bucket_cap per doc
+    path: candidate volume is bucket-LINEAR (bands x BUCKET_CAP per doc
     worst case) instead of quadratic on clustery corpora, at the cost of
     completeness (capped is a connectivity-preserving subset, the right
     input for cluster-based dedup; see dedup.py candidates docs).  In the
@@ -3152,7 +3152,7 @@ def dedup_minhash_capped(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return DD.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=128, bands=16, threshold=0.7,
-        candidates="capped", bucket_cap=64,
+        candidates="capped",
     )
 
 
@@ -3177,7 +3177,7 @@ def dedup_incremental(spark, sf_dir):
     # signature table (the deployment shape this query models); without it
     # the index plan re-shingles per consumer (banding, count, verify)
     index_sigs = DD.minhash_signatures(
-        DD._spread_text(index_docs), "doc_id", "text", n=3, num_hashes=128
+        index_docs, "doc_id", "text", n=3, num_hashes=128
     ).localCheckpoint(eager=True)
     return DD.minhash_lsh_pairs_incremental(
         new_docs, index_sigs, "doc_id", "text",
@@ -3240,13 +3240,9 @@ def stream_corpus_dedup(spark, sf_dir):
         docs = spark.read.parquet(src)
         index_docs = docs.filter(F.col("doc_id") % 5 != 0)
         batch_docs = docs.filter(F.col("doc_id") % 5 == 0)
-        DD.minhash_signatures(
-            DD._spread_text(index_docs), "doc_id", "text", n=3, num_hashes=128
-        ).write.mode("overwrite").parquet(os.path.join(seed, "sigs"))
-        sigs = spark.read.parquet(os.path.join(seed, "sigs"))
-        DD._banded_frame(sigs, 16, 128 // 16).select(
-            "id", "band", "band_key"
-        ).write.mode("overwrite").parquet(os.path.join(seed, "bands"))
+        DD.write_signature_index(
+            index_docs, seed, "doc_id", "text", n=3, num_hashes=128, bands=16
+        )
         index_docs.write.mode("overwrite").parquet(os.path.join(seed, "corpus"))
         batch_docs.write.mode("overwrite").parquet(os.path.join(seed, "incoming"))
         with open(marker, "w") as f:
@@ -5150,7 +5146,7 @@ def zorder_pruned_scan(spark, sf_dir):
 # =========================================================================
 
 _CC_CTES = f"""
-with recursive pairs as materialized ({_minhash_oracle(128, 16, 0.7, bucket_cap=64)}),
+with recursive pairs as materialized ({_minhash_oracle(128, 16, 0.7, capped=True)}),
 edges as materialized (select id_a as a, id_b as b from pairs
           union all select id_b, id_a from pairs),
 reach(id, r) as (
@@ -5183,7 +5179,7 @@ def dedup_clusters(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = DD.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=128, bands=16, threshold=0.7,
-        candidates="capped", bucket_cap=64,
+        candidates="capped",
     )
     return CC.dedup_clusters(docs, pairs)
 
@@ -5211,7 +5207,7 @@ def dedup_keep_best(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = DD.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=128, bands=16, threshold=0.7,
-        candidates="capped", bucket_cap=64,
+        candidates="capped",
     )
     clusters = CC.dedup_clusters(docs, pairs)
     return CC.keep_best(clusters, docs, "n_chars").select(
@@ -5239,7 +5235,7 @@ def _pagerank_iter_sql(prev: str, out: str) -> str:
 
 
 _PR_ORACLE = f"""
-with recursive pairs as materialized ({_minhash_oracle(128, 16, 0.7, bucket_cap=64)}),
+with recursive pairs as materialized ({_minhash_oracle(128, 16, 0.7, capped=True)}),
 edges as materialized (select id_a as u, id_b as v from pairs
           union all select id_b as u, id_a as v from pairs),
 deg as materialized (select u, cast(count(*) as bigint) as deg from edges group by u),
@@ -5267,7 +5263,7 @@ def graph_pagerank(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = DD.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=128, bands=16, threshold=0.7,
-        candidates="capped", bucket_cap=64,
+        candidates="capped",
     )
     return CC.pagerank_int(docs, pairs, iters=3)
 
@@ -5724,13 +5720,9 @@ def decontam_fuzzy(spark, sf_dir):
     evl = docs.filter(F.col("doc_id") % 37 == 0)
 
     def build(root):
-        DD.minhash_signatures(
-            DD._spread_text(train), "doc_id", "text", n=3, num_hashes=128
-        ).write.mode("overwrite").parquet(os.path.join(root, "sigs"))
-        sigs = spark.read.parquet(os.path.join(root, "sigs"))
-        DD._banded_frame(sigs, 16, 128 // 16).select(
-            "id", "band", "band_key"
-        ).write.mode("overwrite").parquet(os.path.join(root, "bands"))
+        DD.write_signature_index(
+            train, root, "doc_id", "text", n=3, num_hashes=128, bands=16
+        )
 
     seed = _derived_fixture(
         "dp3_decontam_sigs", "decontam-v2", sf_dir, "documents.parquet", build

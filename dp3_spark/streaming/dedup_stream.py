@@ -21,9 +21,9 @@ batch-mode dedup per arrival would produce, pinned by the
 streaming-vs-batch parity test.
 
 At 100 TB: the index is a partitioned parquet (or Delta/Iceberg) table;
-appends are file-level; the probe's verify transport follows the batch
-operator's auto dispatch — broadcast while index+batch fit the budget,
-two hash joins beyond.
+appends are file-level; the probe's verify transport is the batch
+operator's (dedup._verify, chosen from row counts) — broadcast while
+index+batch fit the budget, endpoint-sliced or two hash joins beyond.
 
 Crash semantics: foreachBatch is AT-LEAST-ONCE — an epoch that crashed
 mid-batch is reprocessed on restart — so both appends are made
@@ -93,9 +93,8 @@ class StreamingCorpusDedup:
             return self.spark.read.parquet(self.bands_path)
         if index is None:
             return None
-        rows = self.num_hashes // self.bands
-        DD._banded_frame(index, self.bands, rows).select(
-            "id", "band", "band_key"
+        DD._band_keys(
+            index, self.bands, self.num_hashes // self.bands
         ).write.mode("overwrite").parquet(self.bands_path)
         return self.spark.read.parquet(self.bands_path)
 
@@ -134,10 +133,9 @@ class StreamingCorpusDedup:
         ))
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        par = self.spark.sparkContext.defaultParallelism
         n_in = batch_df.count()
         sigs_new = DD.minhash_signatures(
-            DD._spread_text(batch_df),
+            batch_df,
             self.id_col,
             self.text_col,
             n=self.n,
@@ -183,19 +181,13 @@ class StreamingCorpusDedup:
             )
             dropped = drop_vs_index.unionByName(drop_in_batch).distinct()
         else:
-            # first drain: within-batch dedup only.  Reuse the already-
-            # materialized signatures — banding + verify over sigs_new,
-            # not a second shingling pass over the batch
-            rows = self.num_hashes // self.bands
-            banded = DD._banded_frame(sigs_new, self.bands, rows)
-            cand = (
-                banded.alias("x")
-                .join(banded.alias("y"), ["band", "band_key"])
-                .filter(F.col("x.id") < F.col("y.id"))
-                .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-                .repartition(2 * par)
+            # first drain: within-batch dedup only — minhash_lsh_pairs'
+            # pipeline over the already-materialized signatures, not a
+            # second shingling pass over the batch
+            pairs = DD._pairs_from_signatures(
+                sigs_new, n_in, self.bands, self.num_hashes // self.bands,
+                self.threshold,
             )
-            pairs = DD._verify_broadcast(cand, sigs_new, self.threshold)
             dropped = pairs.select(F.col("id_b").alias("id")).distinct()
         dropped = dropped.localCheckpoint(eager=True)
         n_drop = dropped.count()  # free: counts the checkpointed blocks
@@ -224,9 +216,9 @@ class StreamingCorpusDedup:
         # (each table's anti-join makes its own append idempotent; a kept
         # doc only ever matches HIGHER batch ids, so reprocessing an epoch
         # whose bands landed but sigs did not reaches the same decisions)
-        kept_bands = DD._banded_frame(
+        kept_bands = DD._band_keys(
             kept_sigs, self.bands, self.num_hashes // self.bands
-        ).select("id", "band", "band_key")
+        )
         if index_bands is not None:
             kept_bands = kept_bands.join(
                 index_bands.select("id"), "id", "left_anti"

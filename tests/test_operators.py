@@ -263,13 +263,18 @@ def test_np_lsh_signatures_bit_parity(spark):
     assert np_sig.count() == sql_sig.count()
 
 
-def test_minhash_verify_modes_agree(spark):
+def test_minhash_verify_modes_agree(spark, monkeypatch):
     """broadcast (id pairs + broadcast shingle table) and shuffle (arrays
-    per pair) verify transports are the same operator — identical output."""
+    per pair) verify transports are the same operator — identical output.
+    The transport follows the signature row count, so a zero broadcast
+    budget forces the shuffle arm."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6)
-    a = DD.minhash_lsh_pairs(docs, "doc_id", "text", verify="broadcast", **kw)
-    b = DD.minhash_lsh_pairs(docs, "doc_id", "text", verify="shuffle", **kw)
+    a = DD.minhash_lsh_pairs(docs, "doc_id", "text", **kw)
+    monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", 0)
+    b = DD.minhash_lsh_pairs(docs, "doc_id", "text", **kw)
+    plan = lambda df: df._jdf.queryExecution().executedPlan().toString()  # noqa: E731
+    assert "_verify_bc" in plan(a) and "_verify_cols" in plan(b)
     ra = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in a.collect())
     rb = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in b.collect())
     assert ra == rb and len(ra) > 0
@@ -290,9 +295,7 @@ def test_minhash_capped_candidates_subset_and_connective(spark):
         dict(n=3, num_hashes=128, bands=16, threshold=0.7),
     ):
         allp = DD.minhash_lsh_pairs(docs, "doc_id", "text", candidates="all", **kw)
-        capped = DD.minhash_lsh_pairs(
-            docs, "doc_id", "text", candidates="capped", bucket_cap=64, **kw
-        )
+        capped = DD.minhash_lsh_pairs(docs, "doc_id", "text", candidates="capped", **kw)
         sa = {(r["id_a"], r["id_b"]) for r in allp.collect()}
         sc = {(r["id_a"], r["id_b"]) for r in capped.collect()}
         assert len(sc) > 0 and sc <= sa
@@ -349,6 +352,20 @@ def test_ivf_centroids_deterministic(spark):
     b = SIM.ivf_fit_centroids(emb, k_clusters=4, iters=2)
     assert len(a) == 4 and len(a[0]) == 64
     assert a == b  # fixed init, stable argsort -> reproducible
+
+
+def test_memoized_log_store_is_frozen(spark):
+    """events_log_store hands every caller the same memoized LogStore, so
+    no caller may change it under the others: assigning a field raises,
+    and dataclasses.replace still derives a variant."""
+    import dataclasses
+
+    store = events_log_store(spark, SF, us_truncate=True)
+    assert events_log_store(spark, SF, us_truncate=True) is store
+    with pytest.raises(dataclasses.FrozenInstanceError):
+        store.time_col = "ts"
+    variant = dataclasses.replace(store, probe_columns=("props",))
+    assert variant.probe_columns == ("props",) and store.probe_columns == ()
 
 
 def test_stat_rollup_associativity(spark):
@@ -592,25 +609,17 @@ def test_minhash_incremental_matches_full_run(spark, tmp_path):
     )
     assert got == want and len(got) > 0
 
-    # the forced full-table shuffle transport must produce the identical
-    # pair set (the backfill shape: no endpoint slice)
-    inc_sh = DD.minhash_lsh_pairs_incremental(
-        new_docs, index_sigs, "doc_id", "text", verify="shuffle", **kw
-    )
-    got_sh = sorted(
-        (r["id_a"], r["id_b"], round(r["jaccard"], 12)) for r in inc_sh.collect()
-    )
-    assert got_sh == want
-
 
 def test_minhash_incremental_big_index_auto_slices(spark, tmp_path, monkeypatch):
     """Probe batch vs BIG index (simulated by shrinking the broadcast
-    budget): auto must resolve the verify transport on CANDIDATE volume,
+    budget): verify must resolve its transport on CANDIDATE volume,
     endpoint-slicing the signature table (broadcast LeftSemi on the
     candidate-id set) so verify cost is O(candidates) however large the
     index — both the sliced-shuffle and sliced-broadcast arms must be
     hash-identical to the plain run (probe_dedup_100x.py measures the
-    same paths at real 100x index rows)."""
+    same paths at real 100x index rows).  So must the slice's other
+    trigger (an index past ENDPOINT_SLICE_MIN_INDEX_ROWS within the
+    budget) and the unsliced verify past the endpoint-id cap."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6)
     index_docs = docs.filter(F.col("doc_id") % 4 != 0)
@@ -642,6 +651,52 @@ def test_minhash_incremental_big_index_auto_slices(spark, tmp_path, monkeypatch)
             (r["id_a"], r["id_b"], round(r["jaccard"], 12)) for r in inc.collect()
         )
         assert got == want, budget
+
+    monkeypatch.undo()
+    for name in ("ENDPOINT_SLICE_MIN_INDEX_ROWS", "ENDPOINT_SLICE_MAX_BROADCAST_IDS"):
+        with monkeypatch.context() as m:
+            # index trigger → sliced broadcast; zero id cap → slice
+            # skipped after the candidate count, whole-table broadcast
+            m.setattr(DD, "ENDPOINT_SLICE_MIN_INDEX_ROWS", 0)
+            m.setattr(DD, name, 0)
+            got = sorted(
+                (r["id_a"], r["id_b"], round(r["jaccard"], 12))
+                for r in DD.minhash_lsh_pairs_incremental(
+                    new_docs, index_sigs, "doc_id", "text", **kw
+                ).collect()
+            )
+        assert got == want, name
+
+
+def test_minhash_lsh_pairs_reuses_cached_signatures(spark):
+    """A second minhash_lsh_pairs call over the same DataFrame must run no
+    signature pass: the .cache()d signatures match the same plan in
+    Spark's cache manager.  The input text goes through a Python UDF that
+    counts its rows in an accumulator, so any recomputation of the
+    signatures (a localCheckpoint in place of the cache, or an evicted
+    cache) shows as a non-zero count on the second call."""
+    from pyspark.sql.types import StringType
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(F.col("doc_id") < 400)
+    seen = spark.sparkContext.accumulator(0)
+
+    def touch(t):
+        seen.add(1)
+        return t
+
+    src = docs.select("doc_id", F.udf(touch, StringType())("text").alias("text"))
+    kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6, candidates="capped")
+    first = sorted(map(tuple, DD.minhash_lsh_pairs(src, "doc_id", "text", **kw).collect()))
+    assert seen.value > 0 and first
+    seen.value = 0
+    try:
+        second = sorted(
+            map(tuple, DD.minhash_lsh_pairs(src, "doc_id", "text", **kw).collect())
+        )
+        assert seen.value == 0
+        assert second == first
+    finally:
+        DD.minhash_signatures(src, "doc_id", "text", n=3, num_hashes=64).unpersist()
 
 
 def _wav_bytes(rate=44100, channels=2, bits=16, n_frames=1000):
@@ -1456,15 +1511,11 @@ def test_minhash_incremental_symmetric_fallback_matches(spark, monkeypatch):
     assert len(want) > 0
 
     monkeypatch.setattr(DD, "PROBE_BROADCAST_MAX_ROWS", 0)
-    for verify in ("broadcast", "shuffle"):
+    # within the broadcast budget the fallback verifies by broadcast; past
+    # it, by the full-table shuffle (the endpoint slice is probe-only)
+    for budget in (DD.VERIFY_BROADCAST_MAX_ROWS, 0):
+        monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", budget)
         got = key(DD.minhash_lsh_pairs_incremental(
-            new_docs, index_sigs, "doc_id", "text", verify=verify, **kw
+            new_docs, index_sigs, "doc_id", "text", **kw
         ))
-        assert got == want, verify
-    # auto past the broadcast budget on the fallback path resolves to
-    # the full-table shuffle (candidate-sliced auto is probe-only)
-    monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", 0)
-    got = key(DD.minhash_lsh_pairs_incremental(
-        new_docs, index_sigs, "doc_id", "text", **kw
-    ))
-    assert got == want
+        assert got == want, budget

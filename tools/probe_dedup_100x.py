@@ -13,18 +13,17 @@ like the serving probes exclude summary maintenance.  Each measurement
 is a fresh Spark subprocess that reads the persisted (sigs, bands)
 tables and times minhash_lsh_pairs_incremental end-to-end (count()).
 
-Two transports per scale:
-  auto    — deployment behavior (broadcast verify under the 200k budget,
-            shuffle verify beyond: sf10 crosses it)
-  shuffle — the at-scale transport forced everywhere, so the 1x/10x/100x
-            column is apples-to-apples on the path a 100 TB index runs.
-            NOTE: only AUTO endpoint-slices the verify; forcing shuffle
-            keeps the plain full-table two-hash-join transport
-            (dedup.py verify='shuffle'), so this column GROWS with the
-            index — that is the backfill-scale regime, where the
-            pipelined sort-merge joins beat the slice's checkpoint
-            barriers (the eager slice was tried on this path and
-            reverted, see PLANS.md round 8).
+Two verify transports per scale.  dedup._verify picks the transport from
+row counts, so the child forces one by setting the budget constant:
+  auto    — deployment behavior (plain broadcast verify while index+batch
+            fit VERIFY_BROADCAST_MAX_ROWS; past it, or past
+            ENDPOINT_SLICE_MIN_INDEX_ROWS, the signature table is sliced
+            to candidate endpoints first: sf1 and sf10 cross those)
+  shuffle — VERIFY_BROADCAST_MAX_ROWS = 0: the endpoint-sliced two-hash-
+            join transport at every scale, so the 1x/10x/100x column is
+            apples-to-apples on the shuffle path a 100 TB index runs.
+
+Run from the repository root: python3 tools/probe_dedup_100x.py
 """
 import json
 import os
@@ -46,6 +45,8 @@ from dp3_spark.session import get_spark
 from dp3_spark.operators import dedup as DD
 
 idx_dir, verify = sys.argv[1], sys.argv[2]
+if verify == "shuffle":
+    DD.VERIFY_BROADCAST_MAX_ROWS = 0
 spark = get_spark("dedup-probe")
 batch = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").filter(
     F.col("doc_id") % 5 == 0
@@ -56,11 +57,10 @@ for rep in range(2):
     t0 = time.monotonic()
     pairs = DD.minhash_lsh_pairs_incremental(
         batch,
-        spark.read.parquet(f"{idx_dir}/sigs.parquet"),
+        spark.read.parquet(f"{idx_dir}/sigs"),
         "doc_id", "text",
         n=3, num_hashes=128, bands=16, threshold=0.7,
-        verify=verify,
-        index_bands=spark.read.parquet(f"{idx_dir}/bands.parquet"),
+        index_bands=spark.read.parquet(f"{idx_dir}/bands"),
     )
     n = pairs.count()
 print(json.dumps({"sec": time.monotonic() - t0, "pairs": n}))
@@ -72,7 +72,7 @@ def build_index(label: str, sf_dir: str) -> str:
     doc_id%5!=0 slice of sf_dir (the shape StreamingCorpusDedup maintains
     incrementally at ingest)."""
     out = os.path.join(INDEX_ROOT, label)
-    marker = os.path.join(out, "_BUILT")
+    marker = os.path.join(out, "_INDEXED")
     if os.path.exists(marker):
         return out
     from pyspark.sql import functions as F
@@ -84,18 +84,11 @@ def build_index(label: str, sf_dir: str) -> str:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("doc_id") % 5 != 0
     )
-    sigs = DD.minhash_signatures(
-        docs.repartition(spark.sparkContext.defaultParallelism),
-        "doc_id", "text", n=KW["n"], num_hashes=KW["num_hashes"],
+    DD.write_signature_index(
+        docs, out, "doc_id", "text",
+        n=KW["n"], num_hashes=KW["num_hashes"], bands=KW["bands"],
     )
-    sigs.write.mode("overwrite").parquet(f"{out}/sigs.parquet")
-    sigs = spark.read.parquet(f"{out}/sigs.parquet")
-    DD._banded_frame(
-        sigs, KW["bands"], KW["num_hashes"] // KW["bands"]
-    ).select("id", "band", "band_key").write.mode("overwrite").parquet(
-        f"{out}/bands.parquet"
-    )
-    n = sigs.count()
+    n = spark.read.parquet(f"{out}/sigs").count()
     open(marker, "w").write(str(n))
     print(f"indexed {label}: {n} docs", flush=True)
     return out
