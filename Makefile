@@ -2,7 +2,7 @@
 # recorded count is copy-paste reproducible (r8 verdict ask on the
 # gate-scale oracle sweep's env var).
 
-.PHONY: test verify selftest oracle-gate oracle-sf1 bench
+.PHONY: test verify selftest oracle-gate oracle-sf1 bench ab
 
 # full suite (what "686 passed"-style ledger lines run)
 test:
@@ -29,3 +29,11 @@ oracle-sf1:
 # the driver-facing compact JSON)
 bench:
 	python bench.py
+
+# interleaved A/B of one benchmark workload, HEAD (or BASE=<rev>) against
+# the working tree; prints per-side medians, quartiles and pairs won for
+# each end-to-end metric
+PAIRS ?= 10
+SEED ?= 1
+ab:
+	tools/ab_perfbench.sh $(WORKLOAD) $(PAIRS) $(SEED)

@@ -325,39 +325,33 @@ def _banded_frame(
     hashed key — a hash collision merging two buckets would change member
     ranks and thus the capped set, diverging from any oracle that ranks by
     exact keys (collisions can then only ADD verified pairs, never change
-    which pairs the cap keeps)."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[F.col("mh").getItem(bi * rows + r) for r in range(rows)]
-                ).alias("band_key"),
-                *(
-                    [
-                        F.array(
-                            *[F.col("mh").getItem(bi * rows + r) for r in range(rows)]
-                        ).alias("band_vals")
-                    ]
-                    if exact_vals
-                    else []
-                ),
-            )
-            for bi in range(bands)
-        ]
+    which pairs the cap keeps).
+
+    The explode is written as ONE parsed SQL string, not a comprehension
+    of Column calls: in PySpark 4.1 every Column call captures a Python
+    call site and makes several py4j round trips, so the ~650 calls of a
+    16-band x 8-row banding cost thousands of round trips and most of a
+    second of driver time with no Spark job running.  The string takes
+    about 16 round trips and parses to the same Catalyst tree
+    (GetArrayItem, XxHash64, CreateNamedStruct under one Explode), so the
+    codegen'd plan and the keys are those of the Column form.  A
+    transform(sequence(...)) lambda would give the same keys too, but
+    evaluates interpreted on the executors."""
+
+    def vals(bi: int) -> str:
+        return ", ".join(f"mh[{bi * rows + r}]" for r in range(rows))
+
+    structs = ", ".join(
+        f"named_struct('band', {bi}, 'band_key', xxhash64({vals(bi)})"
+        + (f", 'band_vals', array({vals(bi)}))" if exact_vals else ")")
+        for bi in range(bands)
     )
-    extra = [c for c in sigs.columns if c not in ("id", "shingles", "card", "mh")]
-    val_cols = [F.col("bk.band_vals").alias("band_vals")] if exact_vals else []
+    extra = [f"`{c}`" for c in sigs.columns if c not in ("id", "shingles", "card", "mh")]
+    val_cols = ["bk.band_vals AS band_vals"] if exact_vals else []
     return (
-        sigs.filter(F.col("mh").isNotNull())
-        .select("id", *extra, F.explode(band_structs).alias("bk"))
-        .select(
-            "id",
-            *extra,
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-            *val_cols,
-        )
+        sigs.filter("mh IS NOT NULL")
+        .selectExpr("id", *extra, f"explode(array({structs})) AS bk")
+        .selectExpr("id", *extra, "bk.band AS band", "bk.band_key AS band_key", *val_cols)
     )
 
 
@@ -497,13 +491,20 @@ def _verify(cand: DataFrame, sigs: DataFrame, threshold: float, n_rows: int) -> 
     longs and the kernel is vectorized — re-verifying a ~1.3x dup factor
     is far cheaper than a full-candidate-list distinct shuffle (measured
     2x cold / 15% warm on the sf0.1 corpus), so the few verified pairs
-    are deduped AFTER instead.  AQE coalesces the candidate shuffle to few
-    partitions (rows are tiny) but verify does per-pair numpy work, so
-    candidates are re-spread first or the intersect runs on 2-3 cores."""
+    are deduped AFTER instead.
+
+    AQE coalesces the candidate shuffle to few partitions (rows are tiny),
+    so the broadcast arm re-spreads candidates to exactly one task per
+    core.  Each mapInPandas task carries a fixed ~100-150 ms: an identity
+    mapInPandas over 16k rows on 4 cores took 0.35-0.6 s at 4 partitions,
+    0.65-1.0 s at 8 and 1.1-1.5 s at 16 (warm, repeated runs).  One task
+    per core is one wave with every core busy; 2 * par makes a second
+    wave that only adds fixed cost.  The shuffle arm (past the broadcast
+    budget) keeps its 2 * par spread: no benchmark workload reaches it."""
     par = cand.sparkSession.sparkContext.defaultParallelism
     if n_rows > VERIFY_BROADCAST_MAX_ROWS:
         return _verify_shuffle(cand.distinct().repartition(2 * par), sigs, threshold)
-    return _verify_broadcast(cand.repartition(2 * par), sigs, threshold).dropDuplicates(
+    return _verify_broadcast(cand.repartition(par), sigs, threshold).dropDuplicates(
         ["id_a", "id_b"]
     )
 
@@ -824,24 +825,22 @@ def minhash_lsh_pairs_incremental(
 def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 32, n: int = 3) -> DataFrame:
     """SimHash signature over shingle hashes: bit k of the signature is the
     majority vote of bit k across all shingle hashes.  32 bits of the
-    polynomial hash; deterministic."""
-    sh = shingle_hash_df(df, id_col, text_col, n)
+    polynomial hash; deterministic.  Both projections are parsed SQL
+    strings for the py4j reason in _banded_frame (~250 Column calls
+    otherwise)."""
     bit_votes = [
-        F.expr(
-            f"aggregate(shingles, 0, (acc, x) -> acc + case when (x div {1 << k}) % 2 = 1 "
-            f"then 1 else -1 end)"
-        ).alias(f"v{k}")
+        f"aggregate(shingles, 0, (acc, x) -> acc + case when (x div {1 << k}) % 2 = 1 "
+        f"then 1 else -1 end) AS v{k}"
         for k in range(bits)
     ]
-    voted = sh.select("id", F.size("shingles").alias("card"), *bit_votes)
-    sig = voted.select(
-        "id",
-        sum(
-            (F.when(F.col(f"v{k}") > 0, F.lit(1 << k)).otherwise(F.lit(0)) for k in range(bits)),
-            start=F.lit(0),
-        ).cast("long").alias("simhash"),
+    bit_sum = " + ".join(
+        ["0"] + [f"CASE WHEN v{k} > 0 THEN {1 << k} ELSE 0 END" for k in range(bits)]
     )
-    return sig
+    return (
+        shingle_hash_df(df, id_col, text_col, n)
+        .selectExpr("id", *bit_votes)
+        .selectExpr("id", f"CAST({bit_sum} AS BIGINT) AS simhash")
+    )
 
 
 def simhash_dup_pairs(

@@ -62,11 +62,18 @@ def tokens_duck(col: str) -> str:
 # the dsir._spread idiom) — the r10 `docs.count()` gate scheduled a
 # footer-served but REAL Spark job on every call, charging the fixed
 # cost it was meant to avoid to both regimes (r10 verdict, What's wrong
-# #2).  Threshold: the r10 crossover was 20k docs; at the fixture's
-# measured density (~119 B/doc of zstd parquet) that is ~2.4 MB of scan
-# bytes, re-confirmed by interleaved A/B at sf0.1 (5k docs: lazy wins;
-# see PLANS.md r11).  At corpus scale pass count is the whole cost —
-# cores are saturated, so "concurrent" passes still triple CPU + I/O.
+# #2).  Threshold: the r10 crossover was 20k docs (OPTIMIZATION_r10.md,
+# search_bm25 row: at 5k docs 0.61 s lazy vs 1.09 s one-pass; one pass
+# ~1.5 s at 50k docs); at the fixture's measured density (~119 B/doc of
+# zstd parquet) that is ~2.4 MB of scan bytes.  The byte form of the
+# threshold was not re-measured — no A/B of the 2.4 MB gate is recorded.
+# At corpus scale pass count is the whole cost — cores are saturated, so
+# "concurrent" passes still triple CPU + I/O.
+# ADVICE r11 #1: a plan without stats (e.g. an RDD-backed DataFrame)
+# reports spark.sql.defaultSizeInBytes, i.e. Long.MaxValue, from
+# _plan_bytes, so such inputs always take the one-pass branch however
+# small they are: scale-safe, but a tiny ad-hoc corpus pays the ~0.3 s
+# fixed round trip.
 BM25_ONE_PASS_MIN_BYTES = 2_400_000
 
 

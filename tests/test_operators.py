@@ -227,6 +227,93 @@ def test_simhash_pairs_exact_recall_vs_bruteforce(spark, docs):
         assert got == expect, f"max_hamming={max_h}"
 
 
+def test_simhash_matches_column_form(spark):
+    """simhash builds its votes and bit sum as parsed SQL strings; the
+    Column-built form they replaced stays here as the reference and must
+    give the same signature for every document."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for bits in (24, 32):
+        votes = [
+            F.expr(
+                f"aggregate(shingles, 0, (acc, x) -> acc + case when (x div {1 << k}) % 2 = 1 "
+                f"then 1 else -1 end)"
+            ).alias(f"v{k}")
+            for k in range(bits)
+        ]
+        want = (
+            DD.shingle_hash_df(docs, "doc_id", "text", 3)
+            .select("id", F.size("shingles").alias("card"), *votes)
+            .select(
+                "id",
+                sum(
+                    (F.when(F.col(f"v{k}") > 0, F.lit(1 << k)).otherwise(F.lit(0)) for k in range(bits)),
+                    start=F.lit(0),
+                ).cast("long").alias("simhash"),
+            )
+        )
+        got = DD.simhash(docs, "doc_id", "text", bits=bits)
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def _banded_frame_columns(sigs, bands, rows, exact_vals):
+    """The Column-built banding _banded_frame replaced (several thousand
+    py4j round trips at 16 x 8) — the reference for its values."""
+    def vals(bi):
+        return [F.col("mh").getItem(bi * rows + r) for r in range(rows)]
+
+    structs = F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.xxhash64(*vals(bi)).alias("band_key"),
+                *([F.array(*vals(bi)).alias("band_vals")] if exact_vals else []),
+            )
+            for bi in range(bands)
+        ]
+    )
+    val_cols = [F.col("bk.band_vals").alias("band_vals")] if exact_vals else []
+    return (
+        sigs.filter(F.col("mh").isNotNull())
+        .select("id", F.explode(structs).alias("bk"))
+        .select(
+            "id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"), *val_cols
+        )
+    )
+
+
+def test_banded_frame_matches_column_form_in_few_round_trips(spark, monkeypatch):
+    """_banded_frame is one parsed SQL expression: it must return the rows
+    of the Column-built banding (same schema, same band keys and values)
+    and build in a bounded number of py4j round trips — a counter, not a
+    wall clock, so the fix stays pinned on a noisy host."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(F.col("doc_id") < 300)
+    sigs = DD.minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=128).localCheckpoint()
+    # every JVM call of the session goes through its gateway client
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    calls = [0]
+
+    def counting(*a, **k):
+        calls[0] += 1
+        return real(*a, **k)
+
+    for exact in (False, True):
+        calls[0] = 0
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            got = DD._banded_frame(sigs, 16, 8, exact_vals=exact)
+        assert calls[0] < 100, calls[0]
+        want = _banded_frame_columns(sigs, 16, 8, exact)
+        assert got.schema == want.schema
+        assert got._jdf.queryExecution().optimizedPlan().sameResult(
+            want._jdf.queryExecution().optimizedPlan()
+        )
+        rows = sorted(map(tuple, got.collect()))
+        assert rows == sorted(map(tuple, want.collect()))
+        assert len(rows) == 16 * sigs.filter("mh IS NOT NULL").count() > 0
+
+
 def test_cosine_topk_exact(spark):
     emb = spark.createDataFrame(
         [
